@@ -42,10 +42,6 @@ object Bench {
     // scale the compile cost is noise — warm numbers compare the actual
     // data-path throughput. BASELINE.md reports both cold and warm.
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
-    // bench measures compute, not repeated staging I/O: reuse staged rows
-    // whose input+code fingerprint is unchanged (Verify never sets this —
-    // the correctness path always re-writes)
-    QueryStage.reuseUnchanged = true
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
     // SPARK_GRAFT_ONLY=q_a,q_b restricts to named queries (local iteration aid)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

@@ -6,7 +6,7 @@ import graft.ml.{Clustering, Sampling, Similarity}
 /** Wave-11 driver queries (round 9): distributed clustering + semantic
   * dedup + DSIR data selection — the curation shapes that partition a corpus
   * by meaning rather than by bytes. Model state (k-means centroids) is
-  * bounded and memoized like the PQ codebooks; assignments are STAGED
+  * bounded (k rows, collected as a local array); assignments are STAGED
   * ([[QueryStage]]) so the DuckDB oracle re-derives the per-cluster stats /
   * pair closure / importance weights from the identical rows, turning each
   * into a full hash-checked row rather than rows-only. */
@@ -29,13 +29,12 @@ object Queries11 {
     import s.implicits._
     val emb = t(s, dir, "embeddings")
       .select(F.col("vec_id"), F.col("embedding").cast("array<double>").as("embedding"))
-    val cents = QueryStage.memo(dir, "kmeans_model")(
-      Clustering.kmeansFit(emb, "embedding", k = 8))
-    val assigned = QueryStage.stageMemo(dir, "kmeans_assign")(
-      Clustering.kmeansAssign(emb, "embedding", cents))
-    val centsDf = QueryStage.stageMemo(dir, "kmeans_cents")(
+    val cents = Clustering.kmeansFit(emb, "embedding", k = 8)
+    val assigned = QueryStage.stage(
+      Clustering.kmeansAssign(emb, "embedding", cents), dir, "kmeans_assign")
+    val centsDf = QueryStage.stage(
       cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cid", "centroid"))
+        .toDF("cid", "centroid"), dir, "kmeans_cents")
     val dists = assigned.crossJoin(F.broadcast(centsDf))
       .select(F.col("vec_id"), F.col("cluster_id"), F.col("cid"),
         sqDist(F.col("embedding"), F.col("centroid")).as("d"))
@@ -69,10 +68,9 @@ object Queries11 {
     val corpus = emb.unionAll(jit)
     val norm = corpus.select(F.col("vec_id"),
       Similarity.l2Normalize(F.col("embedding")).as("nv"))
-    val cents = QueryStage.memo(dir, "semdedup_model")(
-      Clustering.kmeansFit(norm, "nv", k = 8))
-    val assigned = QueryStage.stageMemo(dir, "semdedup_assign")(
-      Clustering.kmeansAssign(norm, "nv", cents))
+    val cents = Clustering.kmeansFit(norm, "nv", k = 8)
+    val assigned = QueryStage.stage(
+      Clustering.kmeansAssign(norm, "nv", cents), dir, "semdedup_assign")
     val pairs = Clustering.semanticPairs(assigned, "nv", "vec_id", threshold = 0.95)
     graft.ml.Dedup.dedupByClusters(assigned.select("vec_id"), "vec_id", pairs)
       .orderBy("vec_id")
@@ -85,8 +83,8 @@ object Queries11 {
     * Rounded to 6 (sum-order ulp drift across engines). */
   private def qDsirWeights(s: SparkSession, dir: String): SDF = {
     val docs = t(s, dir, "documents")
-    val rawB = QueryStage.stageMemo(dir, "dsir_buckets")(
-      Sampling.hashedNgramBuckets(docs.select("doc_id", "text"), "text", "doc_id"))
+    val rawB = QueryStage.stage(
+      Sampling.hashedNgramBuckets(docs.select("doc_id", "text"), "text", "doc_id"), dir, "dsir_buckets")
     val tgtB = rawB.join(
       docs.where(F.col("lang") === "en").select("doc_id"), Seq("doc_id"))
     Sampling.dsirLogWeights(rawB, tgtB, "doc_id")
@@ -104,16 +102,15 @@ object Queries11 {
   private def qQualityClassifier(s: SparkSession, dir: String): SDF = {
     import s.implicits._
     val docs = t(s, dir, "documents")
-    val feats = QueryStage.stageMemo(dir, "dsir_buckets")(
-      Sampling.hashedNgramBuckets(docs.select("doc_id", "text"), "text", "doc_id"))
+    val feats = QueryStage.stage(
+      Sampling.hashedNgramBuckets(docs.select("doc_id", "text"), "text", "doc_id"), dir, "dsir_buckets")
     val labels = docs.select(F.col("doc_id"),
       F.when(F.col("lang") === "en", 1).otherwise(0).as("label"))
-    val model = QueryStage.memo(dir, "qc_model")(
-      graft.ml.Classifier.logisticFit(feats, labels, "doc_id",
-        buckets = 4096, epochs = 30, lr = 2.0))
+    val model = graft.ml.Classifier.logisticFit(feats, labels, "doc_id",
+      buckets = 4096, epochs = 30, lr = 2.0)
     val wrows = model.weights.toIndexedSeq.zipWithIndex
       .map { case (w, b) => (b, w) } :+ (-1, model.bias)
-    val wDf = QueryStage.stageMemo(dir, "qc_weights")(wrows.toDF("bucket", "w"))
+    val wDf = QueryStage.stage(wrows.toDF("bucket", "w"), dir, "qc_weights")
     val bias = wDf.where(F.col("bucket") === -1).select(F.col("w").as("b"))
     val margins = feats.join(wDf, Seq("bucket"))
       .groupBy("doc_id").agg(F.sum(F.col("cnt") * F.col("w")).as("mg"))

@@ -366,17 +366,17 @@ object Queries2 {
     * the pair join re-derived from the staged rows, so the oracle verifies
     * the bucket-join logic over identical inputs. */
   private def qMinhashPairs(s: SparkSession, dir: String): SDF = {
-    val banded = QueryStage.stageMemo(dir, "minhash_bands")(
+    val banded = QueryStage.stage(
       Dedup.bandedSignatures(t(s, dir, "documents"), "text", "doc_id",
-        numHashes = 32, bands = 8))
+        numHashes = 32, bands = 8), dir, "minhash_bands")
     Dedup.minhashCandidatesFromBands(banded, "doc_id").orderBy("id_a", "id_b")
   }
 
   /** SimHash fingerprints + near-dup pairs — signatures staged, chunk-blocked
     * hamming join verified by the oracle over the staged rows. */
   private def qSimhashPairs(s: SparkSession, dir: String): SDF = {
-    val sigs = QueryStage.stageMemo(dir, "simhash_sigs")(
-      Dedup.simhashSignatures(t(s, dir, "documents"), "text", "doc_id"))
+    val sigs = QueryStage.stage(
+      Dedup.simhashSignatures(t(s, dir, "documents"), "text", "doc_id"), dir, "simhash_sigs")
     Dedup.simhashCandidatesFromSigs(sigs, "doc_id", maxHamming = 10)
       .orderBy("id_a", "id_b")
   }

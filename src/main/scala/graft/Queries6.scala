@@ -74,11 +74,11 @@ object Queries6 {
     * cosines from identical data. Ordered by the ROUNDED cosine so ulp-level
     * fp noise cannot reorder the limit boundary between engines. */
   private def qEmbeddingPairs(s: SparkSession, dir: String): SDF = {
-    val sig = QueryStage.stageMemo(dir, "embedding_buckets")(
+    val sig = QueryStage.stage(
       t(s, dir, "embeddings").filter(F.col("vec_id") < 500)
         .select(F.col("vec_id"),
           F.col("embedding").cast("array<double>").as("embedding"),
-          Dedup.hyperplaneBucket(F.col("embedding"), nPlanes = 8).as("bucket")))
+          Dedup.hyperplaneBucket(F.col("embedding"), nPlanes = 8).as("bucket")), dir, "embedding_buckets")
     Dedup.embeddingCandidatesFromBuckets(sig, "embedding", "vec_id")
       .select(F.col("id_a"), F.col("id_b"), F.round(F.col("cosine"), 6).as("cosine"))
       .orderBy(F.col("cosine").desc, F.col("id_a"), F.col("id_b"))
@@ -91,20 +91,17 @@ object Queries6 {
   private def qIvfTopK(s: SparkSession, dir: String): SDF = {
     import s.implicits._
     val emb = t(s, dir, "embeddings")
-    // one-time staged model state (same stages q_ivf_rerank shares):
-    // stageMemo keeps the timed steady-state run on the probe-search path
-    // instead of re-deriving the assignment lineage per run
-    val staged = QueryStage.stageMemo(dir, "ivf_cells")(
+    // same stages q_ivf_rerank shares
+    val staged = QueryStage.stage(
       Similarity.ivfAssign(emb, "embedding", nCells = 8)
         .select(F.col("vec_id"), F.col("cell_id"),
-          F.col("embedding").cast("array<double>").as("embedding")))
-    val query = QueryStage.memo(dir, "ivf_query")(
+          F.col("embedding").cast("array<double>").as("embedding")), dir, "ivf_cells")
+    val query =
       staged.filter(F.col("vec_id") === 1)
-        .select("embedding").collect()(0).getSeq[Double](0))
-    val centroids = QueryStage.memo(dir, "ivf_centroids")(
-      Similarity.sampleCentroids(emb, "embedding", 8))
+        .select("embedding").collect()(0).getSeq[Double](0)
+    val centroids = Similarity.sampleCentroids(emb, "embedding", 8)
     val probeCells = Similarity.nearestCells(centroids.toSeq, query, 3)
-    val probes = QueryStage.stageMemo(dir, "ivf_probes")(probeCells.toDF("cell_id"))
+    val probes = QueryStage.stage(probeCells.toDF("cell_id"), dir, "ivf_probes")
     staged.join(probes, Seq("cell_id"))
       .select(F.col("vec_id"),
         F.round(Similarity.cosine(F.col("embedding"),
@@ -139,13 +136,12 @@ object Queries6 {
   private def qPqTopK(s: SparkSession, dir: String): SDF = {
     import s.implicits._
     val emb = t(s, dir, "embeddings")
-    val codebooks = QueryStage.memo(dir, "pq_codebooks")(
-      Similarity.pqTrain(emb, "embedding", m = 8, k = 16))
-    val codes = QueryStage.stageMemo(dir, "pq_codes")(
-      Similarity.pqEncode(emb, "embedding", "vec_id", codebooks))
-    val query = QueryStage.memo(dir, "pq_query")(
+    val codebooks = Similarity.pqTrain(emb, "embedding", m = 8, k = 16)
+    val codes = QueryStage.stage(
+      Similarity.pqEncode(emb, "embedding", "vec_id", codebooks), dir, "pq_codes")
+    val query =
       emb.filter(F.col("vec_id") === 1)
-        .select("embedding").collect()(0).getSeq[Float](0).map(_.toDouble).toSeq)
+        .select("embedding").collect()(0).getSeq[Float](0).map(_.toDouble).toSeq
     val lut = Similarity.pqLut(query, codebooks)
     val lutRows = for (j <- lut.indices; c <- lut(j).indices) yield (j + 1, c, lut(j)(c))
     // the lut is staged for the ORACLE (which re-derives the gather-and-sum
@@ -153,7 +149,7 @@ object Queries6 {
     // ([[Similarity.pqAdcDistance]]) — a narrow map + TakeOrderedAndProject,
     // no explode/shuffle (the round-9 explode+join spelling cost ~3× and
     // shuffled an 8× row blowup; both sides still rank on the 6-dp round)
-    QueryStage.stageMemo(dir, "pq_lut")(lutRows.toDF("j", "code", "sq"))
+    QueryStage.stagePath(lutRows.toDF("j", "code", "sq"), dir, "pq_lut", "parquet")
     codes.select(F.col("vec_id"),
         F.round(Similarity.pqAdcDistance(F.col("codes"), lut), 6).as("dist"))
       .orderBy(F.col("dist").asc, F.col("vec_id"))
@@ -202,7 +198,7 @@ object Queries6 {
   private def qStreamingWindow(s: SparkSession, dir: String): SDF = {
     implicit val sp: SparkSession = s
     val schema = t(s, dir, "events").schema
-    val root = QueryStage.streamRoot(dir, "swin", "v1")
+    val root = QueryStage.streamRoot("swin")
     val in = graft.streaming.Streaming.linkedInput(root, dir, "events")
     val stream = graft.streaming.Streaming.scanParquetStream(in, schema)
       .transform(TestTables.normalizeEventsTs)
@@ -247,7 +243,7 @@ object Queries6 {
   private def qStreamingDedup(s: SparkSession, dir: String): SDF = {
     implicit val sp: SparkSession = s
     val schema = t(s, dir, "events").schema
-    val root = QueryStage.streamRoot(dir, "sdedup", "v1")
+    val root = QueryStage.streamRoot("sdedup")
     val in = graft.streaming.Streaming.linkedInput(root, dir, "events")
     val stream = graft.streaming.Streaming.scanParquetStream(in, schema)
       .transform(TestTables.normalizeEventsTs)
@@ -265,7 +261,7 @@ object Queries6 {
   private def qStreamingSink(s: SparkSession, dir: String): SDF = {
     implicit val sp: SparkSession = s
     val schema = t(s, dir, "events").schema
-    val root = QueryStage.streamRoot(dir, "ssink", "v1")
+    val root = QueryStage.streamRoot("ssink")
     // file stream sources take directories: link the single parquet into one
     val in = graft.streaming.Streaming.linkedInput(root, dir, "events")
     val out = new java.io.File(root, "out").getAbsolutePath

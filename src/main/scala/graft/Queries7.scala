@@ -199,7 +199,7 @@ object Queries7 {
   private def qStreamingSession(s: SparkSession, dir: String): SDF = {
     implicit val sp: SparkSession = s
     val schema = t(s, dir, "events").schema
-    val root = QueryStage.streamRoot(dir, "ssess", "v1")
+    val root = QueryStage.streamRoot("ssess")
     val in = graft.streaming.Streaming.linkedInput(root, dir, "events")
     val stream = graft.streaming.Streaming.scanParquetStream(in, schema)
       .transform(TestTables.normalizeEventsTs)
@@ -236,7 +236,7 @@ object Queries7 {
   private def qStreamingJoin(s: SparkSession, dir: String): SDF = {
     implicit val sp: SparkSession = s
     val schema = t(s, dir, "events").schema
-    val root = QueryStage.streamRoot(dir, "sjoin", "v1")
+    val root = QueryStage.streamRoot("sjoin")
     val in = graft.streaming.Streaming.linkedInput(root, dir, "events")
     def stream() = graft.streaming.Streaming.scanParquetStream(in, schema)
       .transform(TestTables.normalizeEventsTs)
@@ -267,82 +267,16 @@ object Queries7 {
     * hash-bucketed on the join key (the write-once/join-many 100 TB layout),
     * then joined and aggregated with NO exchange on the join key
     * (BucketingSpec pins the plan shape; this query pins the VALUES).
-    * Result is materialized before the temp tables are dropped. Bench
-    * hygiene: under [[QueryStage.reuseUnchanged]] the bucketed tables are
-    * written once per JVM and kept — write-once/join-many is precisely the
-    * layout's contract, and re-timing the setup write 4x measures I/O, not
-    * the join. The correctness path (Verify) still writes and drops fresh
-    * tables every call. */
+    * Result is materialized before the temp tables are dropped. */
   private def qBucketedJoin(s: SparkSession, dir: String): SDF = {
     val db = s"graft_bjoin_${java.lang.Integer.toHexString(dir.hashCode)}"
-    val reuse = QueryStage.reuseUnchanged
     try {
-      if (reuse) {
-        // write-once layout at a location keyed by the DATA fingerprint plus
-        // a layout epoch (bump `_b1` when the bucketed schema/bucket count
-        // here changes): a different data state or layout gets its own
-        // directory, so concurrent benches of different states never delete
-        // files the other is reading; repeat runs in the same state
-        // re-register the existing bucketed files by DDL (no setup write)
-        // and later calls in the same JVM short-circuit on the catalog.
-        val sf = new java.io.File(dir).getName
-        val loc = s"/tmp/graft_bucketed/${sf}_${QueryStage.inputFingerprint(dir).take(12)}_b1"
-        // age-based GC: stale data states accumulate one dir per regenerated
-        // testdata; a week-old sibling cannot belong to a live concurrent
-        // run, so reclaim it (never touch same-age siblings — the layout's
-        // concurrency guarantee is that different states don't delete each
-        // other's files)
-        val weekMs = 7L * 24 * 3600 * 1000
-        Option(new java.io.File("/tmp/graft_bucketed").listFiles()).foreach(_.foreach { f =>
-          if (f.getName.startsWith(s"${sf}_") && f.getAbsolutePath != loc &&
-              f.lastModified < System.currentTimeMillis() - weekMs)
-            deleteRecursively(f)
-        })
-        // reuse is only valid when the registered tables point at the
-        // CURRENT fingerprint's location — regenerated sf data mid-JVM gets
-        // a different fingerprint, so a catalog hit alone is not enough
-        def locCurrent(tn: String): Boolean =
-          try s.sessionState.catalog.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(tn, Some(db)))
-            .location.getPath == s"$loc/$tn"
-          catch { case scala.util.control.NonFatal(_) => false }
-        val registered = s.catalog.databaseExists(db) &&
-          s.catalog.tableExists(s"$db.orders_b") && s.catalog.tableExists(s"$db.customer_b") &&
-          locCurrent("orders_b") && locCurrent("customer_b")
-        if (!registered) {
-          // a stale registration (old fingerprint) drops WHOLE-DB so the
-          // recreated database roots at the new fingerprint's location and
-          // managed re-staging writes land there (external re-registered
-          // tables keep their files; managed stale files are the old
-          // fingerprint's and are correct to delete)
-          if (s.catalog.databaseExists(db)) s.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(loc))
-          s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
-          // the committer's _SUCCESS marker is the completeness signal — a
-          // partial write (crash mid-setup) rewrites on the next run
-          def complete(tn: String) =
-            java.nio.file.Files.exists(java.nio.file.Paths.get(loc, tn, "_SUCCESS"))
-          if (complete("orders_b") && complete("customer_b")) {
-            def reg(tn: String, srcName: String, key: String): Unit =
-              if (!s.catalog.tableExists(s"$db.$tn"))
-                s.sql(s"CREATE TABLE $db.$tn (${t(s, dir, srcName).schema.toDDL}) " +
-                  s"USING parquet CLUSTERED BY ($key) SORTED BY ($key) " +
-                  s"INTO 8 BUCKETS LOCATION '$loc/$tn'")
-            reg("orders_b", "orders", "o_custkey")
-            reg("customer_b", "customer", "c_custkey")
-          } else {
-            Seq("orders_b", "customer_b").foreach { tn =>
-              s.sql(s"DROP TABLE IF EXISTS $db.$tn")
-              deleteRecursively(new java.io.File(s"$loc/$tn"))
-            }
-            writeBucketedTables(s, dir, db)
-          }
-        }
-      } else {
-        val loc = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
-        s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
-        writeBucketedTables(s, dir, db)
-      }
+      val loc = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
+      s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
+      graft.io.Bucketed.write(t(s, dir, "orders"), s"$db.orders_b",
+        Seq("o_custkey"), buckets = 8, sortCols = Seq("o_custkey"))
+      graft.io.Bucketed.write(t(s, dir, "customer"), s"$db.customer_b",
+        Seq("c_custkey"), buckets = 8, sortCols = Seq("c_custkey"))
       val o = s.table(s"$db.orders_b")
       val c = s.table(s"$db.customer_b")
       // Sum in decimal cents: double accumulation order differs between the
@@ -357,19 +291,7 @@ object Queries7 {
         .orderBy("c_mktsegment")
       val rows = joined.collect()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), joined.schema)
-    } finally if (!reuse) s.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-  }
-
-  private def writeBucketedTables(s: SparkSession, dir: String, db: String): Unit = {
-    graft.io.Bucketed.write(t(s, dir, "orders"), s"$db.orders_b",
-      Seq("o_custkey"), buckets = 8, sortCols = Seq("o_custkey"))
-    graft.io.Bucketed.write(t(s, dir, "customer"), s"$db.customer_b",
-      Seq("c_custkey"), buckets = 8, sortCols = Seq("c_custkey"))
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
+    } finally s.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
   }
 
   /** Salted join through the gate: the skew-scatter machinery (content-hash

@@ -120,9 +120,9 @@ object Queries8 {
     val copies = docs.filter(F.col("doc_id") % 7 === 2)
       .select((F.col("doc_id") + 200000).as("doc_id"),
         F.regexp_replace(F.col("text"), "^\\S+", "prefixed").as("text"))
-    val chunks = QueryStage.stageMemo(dir, "span_chunks")(
+    val chunks = QueryStage.stage(
       graft.ml.Dedup.spanChunks(docs.unionAll(copies), "text", "doc_id",
-        windowTokens = 30, anchorStride = 10))
+        windowTokens = 30, anchorStride = 10), dir, "span_chunks")
     graft.ml.Dedup.duplicateSpansFromChunks(chunks, "doc_id")
       .orderBy("doc_id", "start_token")
   }

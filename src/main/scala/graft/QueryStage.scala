@@ -17,82 +17,13 @@ import org.apache.spark.sql.{DataFrame => SDF}
   * directory name so a bench run at another SF never clobbers the staged
   * rows the oracle reads.
   *
-  * Bench hygiene: re-writing the stage on every run charged the staging
-  * queries ~4 s of pure I/O per bench pass for rows that had not changed.
-  * With [[reuseUnchanged]] enabled (Bench sets it; Verify never does —
-  * exactness first on the correctness path), a stage whose recorded
-  * fingerprint still matches is read back without the write.
-  *
-  * The fingerprint is QUERY-SCOPED: input files (name/size/mtime) under the
-  * SF dir plus the canonicalized logical plan of the staged frame itself.
-  * Round 9 hashed the WHOLE code artifact instead, which made every fresh
-  * build (the driver repackages the jar each round) invalidate every stage —
-  * the driver's one-shot bench then re-paid ~25 stage writes that a local
-  * steady-state run never saw. A plan hash captures what the staged rows
-  * are computed FROM (schema, expressions, literals, input relations,
-  * collected model constants); editing unrelated operators no longer
-  * invalidates. The residual blind spot — a behavior change INSIDE a
-  * custom expression/kernel whose plan shape is unchanged — is bench-only
-  * by construction (Verify always re-writes), and [[stageEpoch]] is bumped
-  * manually when staged-computation semantics change.
+  * Every call rewrites the stage: Verify, Bench and the benchmark all time
+  * and check the same work.
   */
 object QueryStage {
-  /** Opt-in: skip the stage write when the input+plan fingerprint matches
-    * the one recorded with the existing staged rows. */
-  @volatile var reuseUnchanged: Boolean = false
-
-  /** Bump when the SEMANTICS of a staged computation change without its
-    * logical plan changing (e.g. a custom Expression's eval, a kernel's
-    * mapPartitions body). Cheap insurance for the plan-hash blind spot. */
-  private val stageEpoch = "e1"
-
-  /** Canonicalized-plan signature of the frame being staged: expr ids are
-    * normalized, so the same query built in a fresh JVM/build hashes the
-    * same; literals, schema and input paths are all included. semanticHash
-    * alone is a 32-bit Int — the tree string is added to make collisions
-    * implausible. */
-  private def planSig(df: SDF): String = {
-    val canon = df.queryExecution.analyzed.canonicalized
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(canon.toString.getBytes("UTF-8"))
-    md.update(df.schema.catalogString.getBytes("UTF-8"))
-    md.update(canon.semanticHash().toString.getBytes("UTF-8"))
-    md.update(stageEpoch.getBytes("UTF-8"))
-    md.digest().map("%02x".format(_)).mkString
-  }
-
   def stage(df: SDF, sfDir: String, name: String): SDF = {
     val path = stagePath(df, sfDir, name, "parquet")
     df.sparkSession.read.parquet(path)
-  }
-
-  /** [[stage]] with a LAZY builder and the read-back handle memoized
-    * in-session under the [[memo]] discipline (active only with
-    * [[reuseUnchanged]], i.e. bench). Staged inputs are one-time pipeline
-    * state, but the old spelling re-paid their full driver-side BUILD on
-    * every timed run even when the write was fingerprint-skipped:
-    * re-deriving model-state expressions (literal codebook trees, centroid
-    * sampling jobs), re-canonicalizing + MD5-hashing the staged plan for
-    * the fingerprint, and re-planning the read — measured ~1.4 s of the
-    * q_ivf_rerank 1.75 s steady-state run, vs 0.35 s for the actual search.
-    * The memo holds the PLAN HANDLE (a lazy reader of the staged parquet),
-    * never result rows — every timed action still scans the staged files —
-    * and is keyed by the input-data signature so regenerated inputs
-    * rebuild. A handle whose session has stopped is rebuilt (suite-per-
-    * session safety, mirroring PrepCache). Verify never sets
-    * [[reuseUnchanged]], so the correctness path always rebuilds the full
-    * lineage and rewrites the stage. */
-  def stageMemo(sfDir: String, name: String)(build: => SDF): SDF = {
-    if (!reuseUnchanged) return stage(build, sfDir, name)
-    val key = (sfDir, "stage:" + name, dataSig(sfDir))
-    memoCache.get(key) match {
-      case df: org.apache.spark.sql.Dataset[_] if !df.sparkSession.sparkContext.isStopped =>
-        df.asInstanceOf[SDF]
-      case _ =>
-        val df = stage(build, sfDir, name)
-        memoCache.put(key, df)
-        df
-    }
   }
 
   /** Stage in a named format (parquet/csv/json) and return the PATH, not a
@@ -100,95 +31,50 @@ object QueryStage {
     * through graft's own writers and re-read it through graft's own readers,
     * while the DuckDB oracle parses the SAME staged files with its own
     * independent CSV/JSON parser — an end-to-end check of both directions
-    * that a parquet-only oracle can't give. Same fingerprint + cross-process
-    * lock discipline as [[stage]]. */
+    * that a parquet-only oracle can't give. */
   def stagePath(df: SDF, sfDir: String, name: String, format: String,
                 partitionCols: Seq[String] = Nil): String = {
     val sf = new java.io.File(sfDir).getName
     val path = s"/tmp/graft_stage/$sf/$name"
-    // underscore prefix: parquet readers ignore it, like _SUCCESS
-    val fpPath = java.nio.file.Paths.get(path, "_graft_fingerprint")
-    val fp = dataSig(sfDir) + ":" + planSig(df) + ":" + format +
-      (if (partitionCols.nonEmpty) ":" + partitionCols.mkString(",") else "")
-    // cross-PROCESS exclusion for the check+overwrite: two same-SF JVMs
-    // (a local bench beside the driver's verify) would otherwise both see
-    // a stale fingerprint and interleave their overwrite of one directory
-    // — mode("overwrite") deletes first, so the loser reads a partial file
-    // set. The lock covers writers only; a concurrent DuckDB *read* during
-    // a legitimate re-stage remains the caller's scheduling concern.
+    // cross-PROCESS exclusion for the overwrite: two same-SF JVMs (a local
+    // bench beside a Verify run) would otherwise interleave their
+    // overwrite of one directory — mode("overwrite") deletes first, so the
+    // loser reads a partial file set. The lock covers writers only; a
+    // concurrent DuckDB *read* during a re-stage remains the caller's
+    // scheduling concern.
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"/tmp/graft_stage/$sf"))
     val lockCh = java.nio.channels.FileChannel.open(
       java.nio.file.Paths.get(s"/tmp/graft_stage/$sf/.${name}.lock"),
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
     val lock = lockCh.lock()
     try {
-      val fresh = reuseUnchanged && java.nio.file.Files.isRegularFile(fpPath) &&
-        new String(java.nio.file.Files.readAllBytes(fpPath), "UTF-8") == fp
-      if (!fresh) {
-        val w0 = df.write.mode("overwrite")
-        val w = if (partitionCols.nonEmpty) w0.partitionBy(partitionCols: _*) else w0
-        format match {
-          case "parquet" => w.parquet(path)
-          case "csv"     => w.option("header", "true").csv(path)
-          case "json"    => w.json(path)
-          case other     => throw new IllegalArgumentException(s"stagePath: unsupported format $other")
-        }
-        java.nio.file.Files.write(fpPath, fp.getBytes("UTF-8"))
+      val w0 = df.write.mode("overwrite")
+      val w = if (partitionCols.nonEmpty) w0.partitionBy(partitionCols: _*) else w0
+      format match {
+        case "parquet" => w.parquet(path)
+        case "csv"     => w.option("header", "true").csv(path)
+        case "json"    => w.json(path)
+        case other     => throw new IllegalArgumentException(s"stagePath: unsupported format $other")
       }
     } finally { lock.release(); lockCh.close() }
     path
   }
 
-  /** The input fingerprint for `sfDir` (data files signature) — shared with
-    * other write-once bench artifacts (bucketed tables). Kept data-only:
-    * callers that pair it with code should mix in their own content hash. */
-  private[graft] def inputFingerprint(sfDir: String): String = dataSig(sfDir)
-
-  private val memoCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), Any]()
-
-  /** Memoize a deterministic DRIVER-SIDE value (trained codebooks, sampled
-    * centroids, a collected query vector) under the same reuse discipline as
-    * staged frames: active only with [[reuseUnchanged]] (bench), keyed by
-    * the input fingerprint so any data regeneration recomputes. The cache is
-    * in-JVM only, so code changes can't serve stale values across builds.
-    * Model fitting is one-time state in a real pipeline — the bench should
-    * time the SEARCH path per run, not re-fit per run. Verify never reuses
-    * (exactness first on the correctness path). */
-  def memo[T](sfDir: String, name: String)(compute: => T): T = {
-    if (!reuseUnchanged) return compute
-    val key = (sfDir, name, dataSig(sfDir))
-    memoCache.computeIfAbsent(key, _ => compute).asInstanceOf[T]
-  }
-
-  /** Stable streaming-query root (checkpoint/output/input dirs) under the
-    * bench reuse discipline. A streaming drain over a retained checkpoint is
-    * an incremental RESUME: the source lists, finds nothing new, and stops —
-    * the steady-state cost of a deployed pipeline, which is what repeated
-    * bench runs should measure (the warmup run pays the full first drain).
-    * Keyed by the data fingerprint plus a caller-maintained `token` (bump it
-    * when the query's shape changes — the streaming plan isn't hashed here);
-    * a mismatch wipes the root so the next drain starts clean. Verify never
-    * sets [[reuseUnchanged]], so the correctness path always gets a fresh
-    * temp dir and a full drain. */
   /** The per-root lock FILE serializing every destructive stream-root
-    * operation across JVMs — both [[streamRoot]]'s fingerprint-mismatch wipe
-    * and [[graft.streaming.Streaming.drainToParquet]]'s drain take THIS lock,
-    * so a JVM with a different dataSig/stageEpoch can never rm a root another
-    * JVM is mid-drain on. Lives in the root's PARENT (a wipe of the root must
-    * not delete the lock being held). */
+    * operation across JVMs — [[graft.streaming.Streaming.drainToParquet]]'s
+    * check+wipe+drain takes it. Lives in the root's PARENT (a wipe of the
+    * root must not delete the lock being held). */
   def streamRootLock(root: java.io.File): java.nio.file.Path =
     root.getParentFile.toPath.resolve(s".${root.getName}.lock")
 
-  // Temp (non-reuse) stream roots: ONE static shutdown hook draining a
-  // registry, not one hook per call — a long-lived session invoking
-  // streaming queries repeatedly would otherwise accumulate hooks and temp
-  // trees until exit. A re-run of the same query DISPLACES its previous
-  // root into the retired list rather than deleting it eagerly: a DataFrame
-  // returned by the earlier drain still lazily reads parquet from that root,
-  // and deleting it at re-run time would break that frame's next action
-  // (advisor round 11). All roots — live and retired — are reclaimed by the
-  // shutdown hook, same lifetime the pre-registry per-call hooks gave them.
+  // Stream roots: ONE static shutdown hook draining a registry, not one hook
+  // per call — a long-lived session invoking streaming queries repeatedly
+  // would otherwise accumulate hooks and temp trees until exit. A re-run of
+  // the same query DISPLACES its previous root into the retired list rather
+  // than deleting it eagerly: a DataFrame returned by the earlier drain still
+  // lazily reads parquet from that root, and deleting it at re-run time
+  // would break that frame's next action. All roots — live and retired —
+  // are reclaimed by the shutdown hook.
   private val tempStreamRoots =
     new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
   private val retiredStreamRoots =
@@ -203,50 +89,12 @@ object QueryStage {
     f.delete(); ()
   }
 
-  def streamRoot(sfDir: String, name: String, token: String): java.io.File = {
-    if (!reuseUnchanged) {
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft-q-$name").toFile
-      tempRootHook
-      Option(tempStreamRoots.put(name, tmp)).foreach(retiredStreamRoots.add)
-      return tmp
-    }
-    val sf = new java.io.File(sfDir).getName
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"/tmp/graft_stage/$sf"))
-    val root = new java.io.File(s"/tmp/graft_stage/$sf/stream_$name")
-    val fpPath = root.toPath.resolve("_graft_fingerprint")
-    val fp = dataSig(sfDir) + ":" + token + ":" + stageEpoch
-    val lockCh = java.nio.channels.FileChannel.open(
-      streamRootLock(root),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
-    val lock = lockCh.lock()
-    try {
-      val fresh = java.nio.file.Files.isRegularFile(fpPath) &&
-        new String(java.nio.file.Files.readAllBytes(fpPath), "UTF-8") == fp
-      if (!fresh) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        rm(root)
-        java.nio.file.Files.createDirectories(root.toPath)
-        java.nio.file.Files.write(fpPath, fp.getBytes("UTF-8"))
-      }
-    } finally { lock.release(); lockCh.close() }
-    root
-  }
-
-  private def fileSig(f: java.io.File): String =
-    if (f.isDirectory)
-      Option(f.listFiles()).map(_.sortBy(_.getName).map(fileSig).mkString(","))
-        .getOrElse("")
-    else s"${f.getName}:${f.length}:${f.lastModified}"
-
-  /** Cheap content proxy for the input data: every file's
-    * (name, size, mtime) under the SF dir — re-walked on every call (one
-    * small directory listing) so regenerating the sf data mid-JVM is seen. */
-  private def dataSig(sfDir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(fileSig(new java.io.File(sfDir)).getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
+  /** A fresh temp directory for one streaming query's checkpoint, output
+    * and input links, so every call runs a full drain. */
+  def streamRoot(name: String): java.io.File = {
+    val tmp = java.nio.file.Files.createTempDirectory(s"graft-q-$name").toFile
+    tempRootHook
+    Option(tempStreamRoots.put(name, tmp)).foreach(retiredStreamRoots.add)
+    tmp
   }
 }

@@ -360,7 +360,19 @@ object SparkEntry {
   // ----------------------------------------------------------------------
   // queries map (driver contract)
   // ----------------------------------------------------------------------
-  def queries: Map[String, (SparkSession, String) => SDF] = coreQueries ++ Queries2.queries ++ Queries3.queries ++ Queries4.queries ++ Queries5.queries ++ Queries6.queries ++ Queries7.queries ++ Queries8.queries ++ Queries9.queries ++ Queries10.queries ++ Queries11.queries ++ Queries12.queries ++ Queries13.queries ++ Queries14.queries ++ Queries15.queries ++ Queries16.queries
+  def queries: Map[String, (SparkSession, String) => SDF] = disjointUnion(Seq(coreQueries,
+    Queries2.queries, Queries3.queries, Queries4.queries, Queries5.queries, Queries6.queries,
+    Queries7.queries, Queries8.queries, Queries9.queries, Queries10.queries, Queries11.queries,
+    Queries12.queries, Queries13.queries, Queries14.queries, Queries15.queries, Queries16.queries))
+
+  /** Union of the per-file maps. A name defined in two maps is a bug, not an
+    * override: `++` would let the later map win silently. */
+  private[graft] def disjointUnion[V](maps: Seq[Map[String, V]]): Map[String, V] =
+    maps.foldLeft(Map.empty[String, V]) { (acc, m) =>
+      val dup = acc.keySet.intersect(m.keySet)
+      require(dup.isEmpty, s"duplicate query names: ${dup.toSeq.sorted.mkString(", ")}")
+      acc ++ m
+    }
 
   private def coreQueries: Map[String, (SparkSession, String) => SDF] = Map(
     "q1_agg" -> (q1Agg _),
@@ -394,7 +406,11 @@ object SparkEntry {
     "q_explode" -> (qExplode _),
   )
 
-  def oracleSql: Map[String, String] = coreOracleSql ++ Queries2.oracleSql ++ Queries3.oracleSql ++ Queries4.oracleSql ++ Queries5.oracleSql ++ Queries6.oracleSql ++ Queries7.oracleSql ++ Queries8.oracleSql ++ Queries9.oracleSql ++ Queries10.oracleSql ++ Queries11.oracleSql ++ Queries12.oracleSql ++ Queries13.oracleSql ++ Queries14.oracleSql ++ Queries15.oracleSql ++ Queries16.oracleSql
+  def oracleSql: Map[String, String] = disjointUnion(Seq(coreOracleSql,
+    Queries2.oracleSql, Queries3.oracleSql, Queries4.oracleSql, Queries5.oracleSql,
+    Queries6.oracleSql, Queries7.oracleSql, Queries8.oracleSql, Queries9.oracleSql,
+    Queries10.oracleSql, Queries11.oracleSql, Queries12.oracleSql, Queries13.oracleSql,
+    Queries14.oracleSql, Queries15.oracleSql, Queries16.oracleSql))
 
   private def coreOracleSql: Map[String, String] = Map(
     "q1_agg" ->

@@ -33,8 +33,13 @@ object PrepCache {
       }
     }
 
-  /** Persist `df` (MEMORY_AND_DISK) under LRU discipline; a semantically
-    * identical plan already registered is reused rather than re-persisted. */
+  /** Persist `df` (MEMORY_AND_DISK) under LRU discipline and return `df`
+    * itself. A semantically identical plan already registered shares its
+    * cached data through Spark's `CacheManager` (the persist is a no-op
+    * there); the earlier FRAME is never handed back, because its physical
+    * plan lists the files of its own read — after the input path is
+    * overwritten (a re-stage) those files are gone, while `df`'s fresh read
+    * lists the new ones. */
   def persistBounded(df: DataFrame): DataFrame = synchronized {
     // a cached frame is bound to the session that registered it; after that
     // session stops (suite teardown), handing it back would fail on first
@@ -44,19 +49,14 @@ object PrepCache {
     val it = entries.values().iterator()
     while (it.hasNext) if (it.next().sparkSession.sparkContext.isStopped) it.remove()
     val plan = df.queryExecution.analyzed
-    val key = plan.semanticHash()
-    val prior = entries.get(key)
-    // semanticHash is 32-bit: guard reuse with a real plan comparison so a
-    // collision degrades to a duplicate persist, never to wrong data
-    if (prior != null && prior.queryExecution.analyzed.sameResult(plan)) prior
-    else {
-      df.persist(StorageLevel.MEMORY_AND_DISK)
-      val displaced = entries.put(key, df)
-      // a collision displaces the old entry from the LRU — unpersist it here
-      // or its cached blocks leak for the session lifetime
-      if (displaced != null) quietUnpersist.accept(displaced)
-      df
-    }
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    val displaced = entries.put(plan.semanticHash(), df)
+    // semanticHash is 32-bit: a collision displaces a DIFFERENT plan from
+    // the LRU — unpersist it here or its cached blocks leak for the session
+    // lifetime (a same-plan entry shares df's cached data: keep it cached)
+    if (displaced != null && !displaced.queryExecution.analyzed.sameResult(plan))
+      quietUnpersist.accept(displaced)
+    df
   }
 
   /** Unpersist and forget everything (test hygiene). */

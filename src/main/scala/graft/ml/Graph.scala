@@ -192,10 +192,11 @@ object Graph {
       // iteration and the loop goes superlinear on the DRIVER regardless of
       // data size (measured: 10 iterations 40.6 s with persist, all
       // planning; guide §5 "localCheckpoint is a cheaper way to cut
-      // lineage"). The fault-tolerance trade is the standard iterative-
-      // algorithm one: a lost executor re-runs the query instead of
-      // recomputing from lineage — at > 4 iterations that expectation is
-      // cheaper than superlinear planning on every healthy run. Values are
+      // lineage"). The fault-tolerance trade: checkpointed blocks live only
+      // in executor storage with no lineage behind them, so a lost executor
+      // FAILS the job — Spark cannot recompute a cut generation, and the
+      // caller has to re-run the whole call. At > 4 iterations that risk is
+      // accepted over superlinear planning on every healthy run. Values are
       // unchanged (same IEEE ops; GraphSpec pins eager ≡ lazy ≡ local
       // reference). Blocks are ContextCleaner-managed: freed as each
       // generation's frame is dropped.

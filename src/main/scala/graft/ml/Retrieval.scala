@@ -169,8 +169,8 @@ object Retrieval {
         // means the 64-token budget is exceeded → full-stream fallback,
         // exactly the old decision. Tokenization stays Spark's own split so
         // the mask can never miss a gram the join would have matched;
-        // sorted so the IN-list literal (and any staged-plan fingerprint
-        // downstream) is deterministic across partitionings.
+        // sorted so the IN-list literal is deterministic across
+        // partitionings.
         val firsts = queries
           .select(F.explode(ngramTerms(F.col(queryTextCol), n)).as("term"))
           .select(F.substring_index(F.col("term"), " ", 1).as("t"))

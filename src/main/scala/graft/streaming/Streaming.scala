@@ -170,9 +170,8 @@ object Streaming {
     * drain pays the full micro-batch cost; a later drain over the same root
     * RESUMES — the file source lists, finds no new input, runs zero batches,
     * and the retained output is read back. That is the steady-state cost of
-    * a deployed incremental pipeline, which is what repeated runs should
-    * measure (see [[graft.QueryStage.streamRoot]] for the reuse discipline —
-    * the correctness gate always gets a fresh root and a full drain).
+    * a deployed incremental pipeline. (The SparkEntry queries pass a fresh
+    * [[graft.QueryStage.streamRoot]] per call, so they always drain fully.)
     * `complete` mode overwrites root/out each batch via foreachBatch
     * (idempotent on retry); `append` uses the native exactly-once file sink
     * (`_spark_metadata`-tracked). Returns the output read back from disk. */
@@ -187,9 +186,8 @@ object Streaming {
     // sharing a retained root (a local bench beside the driver's) must not
     // wipe a checkpoint the other is mid-drain on, nor run two streaming
     // queries over ONE checkpoint directory (the HDFS metadata log does not
-    // arbitrate across JVMs). The lock is [[graft.QueryStage.streamRootLock]]
-    // — the SAME file streamRoot holds for its fingerprint-mismatch wipe, and
-    // it lives OUTSIDE the root: a lock inside the root would be deleted by
+    // arbitrate across JVMs). The lock is [[graft.QueryStage.streamRootLock]],
+    // and it lives OUTSIDE the root: a lock inside the root would be deleted by
     // the very wipe it is supposed to serialize, letting another JVM rm a
     // root this one is mid-drain on (round-10 ADVICE). The post-drain READ
     // of out/ remains the caller's scheduling concern.
@@ -229,8 +227,8 @@ object Streaming {
       // typed nodes (FlatMapGroupsWithState, AppendColumns) print their
       // closure as Class$$Lambda$<n>/0x<addr>@<hash> — JVM/instance noise;
       // keep the class name (shape), drop the identity. A changed lambda
-      // BODY is invisible to any plan hash — same documented blind spot as
-      // QueryStage.stageEpoch.
+      // BODY is invisible to any plan hash — callers mix such parameters
+      // into `salt`.
       val canon = stream.queryExecution.analyzed.canonicalized.toString
         .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<uuid>")
         .replaceAll("\\$\\$Lambda\\$\\d+/0x[0-9a-f]+", "\\$\\$Lambda")

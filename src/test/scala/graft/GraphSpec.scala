@@ -22,17 +22,22 @@ class GraphSpec extends SparkSpec {
   }
 
   test("pageRank matches the local power iteration on a cyclic graph") {
+    // 4 is the last lazy iteration count and 5 the first eager one: both
+    // sides of the boundary must match the reference
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L))
-    val got = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst",
-        iterations = 5, damping = 0.85)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val want = ref(edges, 5, 0.85)
-    assert(got.keySet == want.keySet)
-    got.foreach { case (k, v) => assert(math.abs(v - want(k)) < 1e-12, s"node $k") }
+    for (iters <- Seq(4, 5)) {
+      val got = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst",
+          iterations = iters, damping = 0.85)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val want = ref(edges, iters, 0.85)
+      assert(got.keySet == want.keySet, s"iterations $iters")
+      got.foreach { case (k, v) =>
+        assert(math.abs(v - want(k)) < 1e-12, s"iterations $iters, node $k") }
+    }
   }
 
-  test("pageRank eager path (iterations > 8) matches the local power iteration") {
-    // the >8-iteration branch collects the dangling mass as a driver scalar
+  test("pageRank eager path (iterations > 4) matches the local power iteration") {
+    // the >4-iteration branch collects the dangling mass as a local scalar
     // per iteration and releases generations eagerly — must be value-
     // identical to the lazy broadcast-subquery chain (same IEEE ops)
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (4L, 1L)) // 4's in-degree 0 path + dangling-free core
