@@ -42,7 +42,20 @@ object Bench {
     // scale the compile cost is noise — warm numbers compare the actual
     // data-path throughput. BASELINE.md reports both cold and warm.
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    // One timed run: the query's whole physical plan, final sort included,
+    // without collecting rows. (`count()` on the frame would let Catalyst's
+    // EliminateSorts drop that sort, so it would never be timed.)
+    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+      val t0 = System.nanoTime()
+      fn(spark, sfDir).queryExecution.toRdd.count()
+      (System.nanoTime() - t0) / 1e9
+    }
+    def median(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+      val ts = Seq.fill(runs)(runOnce(fn)).sorted
+      ts(ts.size / 2)
+    }
+    try SparkEntry.entry(spark).queryExecution.toRdd.count()
+    catch { case e: Throwable => System.err.println(s"bench: entry warm-up FAILED: $e") }
     // SPARK_GRAFT_ONLY=q_a,q_b restricts to named queries (local iteration aid)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = only.fold(SparkEntry.queries)(names => SparkEntry.queries.filter(kv => names(kv._1)))
@@ -96,17 +109,14 @@ object Bench {
     val measured = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     sortedQueries.zipWithIndex.foreach { case ((name, fn), qi) =>
       if (qi == half) canaryMid = canary()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => }
-      var ok = true
-      val times = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => ok = false }
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      // a throwing query must NOT pass off its time-to-exception as a
-      // benchmark number — report -1 so breakage is machine-visible
-      if (!ok) { failed += name; System.err.println(s"bench: query $name FAILED") }
-      measured(name) = if (ok) times(times.size / 2) else -1.0
+      // a throwing query (warm-up or timed run) must NOT pass off its
+      // time-to-exception as a benchmark number — report -1 so breakage is
+      // machine-visible
+      measured(name) =
+        try { runOnce(fn); median(fn) }
+        catch { case e: Throwable =>
+          failed += name; System.err.println(s"bench: query $name FAILED: $e"); -1.0
+        }
     }
     val canaryLast = canary()
     // Inflated-query retries run as a SECOND pass after the whole sweep
@@ -125,14 +135,10 @@ object Bench {
         retriesLeft -= 1
         val ref = refTimes(name)
         val retryMed =
-          try {
-            val ts = (1 to runs).map { _ =>
-              val t0 = System.nanoTime()
-              fn(spark, sfDir).count()
-              (System.nanoTime() - t0) / 1e9
-            }.sorted
-            ts(ts.size / 2)
-          } catch { case _: Throwable => Double.MaxValue }
+          try median(fn)
+          catch { case e: Throwable =>
+            System.err.println(s"bench: $name retry FAILED: $e"); Double.MaxValue
+          }
         if (retryMed < med) {
           System.err.println(f"bench: $name inflated (${med}%.2fs vs committed ${ref}%.2fs) — re-measured post-sweep, kept retry median ${retryMed}%.2fs")
           retried += name

@@ -130,16 +130,15 @@ object Queries5 {
       .sortBy(Seq(col("event_id")))
       .collect().toSpark
 
-  /** Native StrReplaceN expression through the function registry. */
-  private def qReplaceN(s: SparkSession, dir: String): SDF = {
-    graft.ext.GraftExtensions.register(s)
+  /** Native StrReplaceN expression through the function registry
+    * (`SparkEntry.queries` registers graft's extensions for every query). */
+  private def qReplaceN(s: SparkSession, dir: String): SDF =
     lf(s, dir, "documents")
       .select(
         col("doc_id"),
         col("text").str.slice(0, Some(40)).str.replaceN("a", "@", 1).alias("one_sub"))
       .sortBy(Seq(col("doc_id")))
       .collect().toSpark
-  }
 
   def queries: Map[String, (SparkSession, String) => SDF] = Map(
     "q_replace_n" -> (qReplaceN _),

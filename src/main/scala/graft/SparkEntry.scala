@@ -4,6 +4,7 @@ import org.apache.spark.sql.{SparkSession, DataFrame => SDF, functions => F}
 import org.apache.spark.sql.expressions.Window
 import graft.api.{DataFrame, LazyFrame, SQLContext}
 import graft.expr.Expr
+import graft.ext.GraftExtensions
 import graft.Polars._
 
 /** Driver contract — one `queries` entry per implemented operator from
@@ -27,6 +28,7 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * TPC-H Q1 shape through the lazy API: scan → filter → group → agg → sort. */
   def entry(spark: SparkSession): SDF = {
+    GraftExtensions.register(spark)
     val dir = "/root/testdata/sf0.001"
     lf(spark, dir, "lineitem")
       .filter(col("l_quantity") > 0)
@@ -360,10 +362,16 @@ object SparkEntry {
   // ----------------------------------------------------------------------
   // queries map (driver contract)
   // ----------------------------------------------------------------------
+  /** Every query first registers graft's extensions on its session (native
+    * functions, and the planner strategy that computes a global sort's input
+    * once), so Verify, Bench and the benchmark all plan the same way. */
   def queries: Map[String, (SparkSession, String) => SDF] = disjointUnion(Seq(coreQueries,
     Queries2.queries, Queries3.queries, Queries4.queries, Queries5.queries, Queries6.queries,
     Queries7.queries, Queries8.queries, Queries9.queries, Queries10.queries, Queries11.queries,
     Queries12.queries, Queries13.queries, Queries14.queries, Queries15.queries, Queries16.queries))
+    .map { case (name, fn) =>
+      name -> { (s: SparkSession, dir: String) => GraftExtensions.register(s); fn(s, dir) }
+    }
 
   /** Union of the per-file maps. A name defined in two maps is a bug, not an
     * override: `++` would let the later map win silently. */

@@ -83,8 +83,8 @@ final class StrNS(e: Expr) {
     m(c => F.regexp_replace(c, "(?s)\\A(.*?)(?:" + shiftedPat + ")", "$1" + shiftedRepl))
   }
   /** Replace first n occurrences via the native [[graft.ext.StrReplaceN]]
-    * expression (requires `GraftExtensions.register(spark)` or the
-    * `spark.sql.extensions` config). */
+    * expression (requires `GraftExtensions.register(spark)`, which every
+    * `SparkEntry.queries` call runs, or the `spark.sql.extensions` config). */
   def replaceN(pat: String, repl: String, n: Int): Expr =
     m(c => F.call_function("graft_replace_n", c, F.lit(pat), F.lit(repl), F.lit(n)))
   def replaceAll(pat: String, repl: String): Expr = m(c => F.regexp_replace(c, pat, repl))

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{EvalOnceStrategy, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, QuaternaryExpression}
@@ -63,9 +63,11 @@ object StrReplaceN {
 
 /** Session-extension wiring (`spark.sql.extensions=graft.ext.GraftExtensions`)
   * — registers graft's native expressions into the function registry so both
-  * SQL and `call_function` resolve them. */
+  * SQL and `call_function` resolve them, and plans every global sort with
+  * [[org.apache.spark.sql.EvalOnceStrategy]] so its input is computed once. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPlannerStrategy(_ => EvalOnceStrategy)
     ext.injectFunction(GraftExtensions.replaceNDescriptor)
     ext.injectFunction(GraftExtensions.minhashDescriptor)
     ext.injectFunction(GraftExtensions.unicodeNormDescriptor)
@@ -98,8 +100,11 @@ object GraftExtensions {
     })
 
   /** Direct registration on an existing session (extensions only apply at
-    * session construction). */
+    * session construction). Idempotent: the sort strategy is appended once. */
   def register(spark: SparkSession): Unit = {
+    val extra = spark.experimental.extraStrategies
+    if (!extra.contains(EvalOnceStrategy))
+      spark.experimental.extraStrategies = extra :+ EvalOnceStrategy
     spark.sessionState.functionRegistry.registerFunction(
       replaceNDescriptor._1, replaceNDescriptor._2, replaceNDescriptor._3)
     spark.sessionState.functionRegistry.registerFunction(

@@ -124,10 +124,17 @@ object Dedup {
 
   /** Candidate pairs from banded signature rows: self-join on
     * (band_idx, band_hash) — a hash shuffle over bucket keys; no quadratic
-    * blow-up outside buckets. Returns (id_a, id_b, n_shared_bands), id_a < id_b. */
+    * blow-up outside buckets. Returns (id_a, id_b, n_shared_bands), id_a < id_b.
+    *
+    * The join is pinned to sort-merge, the plan Spark picks once the bands
+    * outgrow the broadcast threshold. Left to itself at small sizes Spark
+    * broadcasts the two-key build side as a hash relation whose first
+    * memory page (16 MB at a 3 GB heap) does not shrink to its few
+    * thousand rows, and that page stays in the block store until a full GC
+    * lets the ContextCleaner drop the broadcast. */
   def minhashCandidatesFromBands(banded: DataFrame, idCol: String): DataFrame = {
     val a = banded.as("a")
-    val b = banded.as("b")
+    val b = banded.hint("merge").as("b")
     a.join(b, F.col("a.band_idx") === F.col("b.band_idx") &&
         F.col("a.band_hash") === F.col("b.band_hash") &&
         F.col(s"a.$idCol") < F.col(s"b.$idCol"))

@@ -152,6 +152,8 @@ object Graph {
     val nVal: Double = nodes.count().toDouble
     var ranks = reg.persistBounded(base
       .select(F.col("node"), F.col("__deg__"), F.lit(1.0 / nVal).as("rank")))
+    // the previous lineage-cut generation (eager path only)
+    var cut: Option[DataFrame] = None
     var i = 0
     while (i < iterations) {
       // mass parked on dangling nodes this iteration: a broadcast scalar
@@ -198,9 +200,11 @@ object Graph {
       // caller has to re-run the whole call. At > 4 iterations that risk is
       // accepted over superlinear planning on every healthy run. Values are
       // unchanged (same IEEE ops; GraphSpec pins eager ≡ lazy ≡ local
-      // reference). Blocks are ContextCleaner-managed: freed as each
-      // generation's frame is dropped.
+      // reference). Nothing else frees a cut generation's blocks before a
+      // GC, so each one is released as soon as the next has materialized
+      // from it.
       val next = if (eager) next0.localCheckpoint(true) else reg.persistBounded(next0)
+      if (eager) { cut.foreach(releaseCut); cut = Some(next) }
       ranks = next
       i += 1
     }
@@ -208,10 +212,19 @@ object Graph {
     // release every frame this call persisted: the registry's pins must
     // not outlive the call (repeated pageRank calls would otherwise grow
     // executor storage without bound — the invariant BoundedCache exists
-    // for). The localCheckpoint blocks are ContextCleaner-managed: freed
-    // when the caller drops the returned frame, not pinned forever.
+    // for). The last loop generation goes too, so only the returned
+    // frame's blocks stay; ContextCleaner frees those once the caller drops
+    // it.
     val out = ranks.select(F.col("node"), F.col("rank")).localCheckpoint(true)
+    cut.foreach(releaseCut)
     reg.releaseAll()
     out
   }
+
+  /** Drops the blocks behind an eager `localCheckpoint` frame. */
+  private def releaseCut(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = true)
+      case _ =>
+    }
 }

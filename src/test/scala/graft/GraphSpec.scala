@@ -161,6 +161,21 @@ class GraphSpec extends SparkSpec {
       s"pageRank leaked persisted frames: $base -> $persistedCount")
   }
 
+  test("eager pageRank releases each cut generation: only the returned one stays stored") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (4L, 1L)).toDF("src", "dst")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = Graph.pageRank(edges, "src", "dst", iterations = 10)
+    // no GC is forced: the generations must be gone on return, not later
+    val kept = sc.getPersistentRDDs.keySet -- before
+    val returned = out.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
+    assert(returned.size == 1 && kept == returned,
+      s"stored RDDs after the call: $kept, returned frame's: $returned")
+    assert(out.count() == 4)
+  }
+
   test("pageRank scheduling floor: bounded jobs, AQE-coalesced tasks per stage") {
     // Round-13 floor pin (BASELINE.md "q_pagerank floor analysis"): a
     // 3-iteration run is ~13 exchanges; with AQE each materializes as its

@@ -24,6 +24,17 @@ class MlSpec extends SparkSpec {
     assert(!pairs.contains((1L, 3L)) && !pairs.contains((2L, 3L)))
   }
 
+  test("minhash band self-join is sort-merge, never a broadcast, even when tiny") {
+    val docs = Seq((1L, "alpha beta gamma delta epsilon"), (2L, "alpha beta gamma delta zeta"))
+      .toDF("doc_id", "text")
+    val banded = Dedup.bandedSignatures(docs, "text", "doc_id", numHashes = 8, bands = 4)
+    val cand = Dedup.minhashCandidatesFromBands(banded, "doc_id")
+    cand.collect()
+    val plan = cand.queryExecution.executedPlan.toString
+    assert(plan.contains("SortMergeJoin"), plan)
+    assert(!plan.contains("BroadcastHashJoin"), plan)
+  }
+
   test("within-doc paragraph dedup keeps first occurrences, zero shuffle") {
     val docs = Seq((1L, "a\n\nb\n\na\n\nc\n\nb"), (2L, "x"), (3L, "y\n\ny"))
       .toDF("doc_id", "text")

@@ -34,6 +34,15 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
+  test("graft sortBy plans one range exchange with EvalOnce directly under it") {
+    val p = plan(graft.api.LazyFrame(spark.read.parquet(s"$sf/orders.parquet"))
+      .sortBy(Seq(Polars.col("o_totalprice"))).toSpark)
+    val lines = p.linesIterator.toVector
+    val range = lines.indices.filter(i => lines(i).contains("Exchange rangepartitioning"))
+    assert(range.size == 1, p)
+    assert(lines.lift(range.head + 1).exists(_.contains("EvalOnce")), p)
+  }
+
   test("rank filter pushes a WindowGroupLimit below the shuffle") {
     val w = Window.partitionBy("l_returnflag").orderBy("l_quantity")
     val p = plan(spark.read.parquet(s"$sf/lineitem.parquet")

@@ -34,6 +34,8 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // plan like Verify and the benchmark: graft's functions and sort strategy
+    graft.ext.GraftExtensions.register(s)
     // WindowExec warns "No Partition Defined" on every global window; every
     // library global window runs over a BOUNDED partials/stratum frame (the
     // invariant GlobalWindowLintSpec pins per-site), so in the test logs the
