@@ -99,7 +99,7 @@ object Bench {
           "\"(q[A-Za-z0-9_]*)\":(-?[0-9.]+)".r.findAllMatchIn(qSec)
             .map(m => m.group(1) -> m.group(2).toDouble).toMap
         }
-      } catch { case _: Throwable => Map.empty }
+      } catch { case _: java.nio.file.NoSuchFileException => Map.empty }
     var retriesLeft = 25
     val retried = scala.collection.mutable.ListBuffer.empty[String]
     var canaryMid = -1.0
@@ -177,7 +177,7 @@ object Bench {
         val sfName = new java.io.File(sfDir).getName // e.g. sf0.1
         val m = (s""""${java.util.regex.Pattern.quote(sfName)}":\\s*\\{\\s*"total_sec":\\s*([0-9.]+)""").r
         m.findFirstMatchIn(txt).map(g => s""","duckdb_total":${g.group(1)}""").getOrElse("")
-      } catch { case _: Throwable => "" }
+      } catch { case _: java.nio.file.NoSuchFileException => "" }
     // escape interpolated PATHS/names for JSON (the same validity care fmt
     // takes for numbers — a backslash or quote must not break the parse)
     def js(v: String): String =

@@ -372,9 +372,9 @@ object Polars {
 
   // ---- frame constructors / IO (reference: lib/polars/io/*.rb) ----
   def readParquet(path: String)(implicit spark: SparkSession): DataFrame =
-    DataFrame(spark.read.parquet(path))
+    DataFrame(io.Scan.parquet(spark, path))
   def scanParquet(path: String)(implicit spark: SparkSession): LazyFrame =
-    LazyFrame(spark.read.parquet(path))
+    LazyFrame(io.Scan.parquet(spark, path))
   /** read_csv with the reference's common options (lib/polars/io/csv.rb):
     * skip_rows/null_values/dtypes/quote_char/comment_prefix/encoding/eol_char/
     * n_rows/new_columns/ignore_errors, mapped onto the Spark CSV reader.
@@ -520,7 +520,7 @@ object Polars {
       DataFrame(io.AvroIo.read(path))
     }
   def readParquetSchema(path: String)(implicit spark: SparkSession): org.apache.spark.sql.types.StructType =
-    spark.read.parquet(path).schema
+    io.Scan.parquet(spark, path).schema
   /** Arrow IPC facade (reference Polars.read_ipc / scan_ipc family —
     * io/ipc.rb); implementation in [[io.ArrowIpc]]. */
   def readIpc(path: String)(implicit spark: SparkSession): DataFrame =

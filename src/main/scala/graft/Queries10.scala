@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame => SDF, functions => F}
+import graft.TestTables.t
 
 /** Wave-10 driver queries (round 9): oracle-checked IO ROUND TRIPS. The
   * CSV/NDJSON writers and readers were spec-only; here a table is written
@@ -12,9 +13,6 @@ import org.apache.spark.sql.{SparkSession, DataFrame => SDF, functions => F}
   * Staging goes through [[QueryStage]]: the oracle
   * SQL hardcodes the sf0.01 stage path the driver's Verify writes. */
 object Queries10 {
-
-  private def t(s: SparkSession, dir: String, name: String): SDF =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** CSV round trip on `orders`: graft writeCsv → graft read_csv
     * (try_parse_dates exercises date inference; totals exercise double
@@ -102,7 +100,7 @@ object Queries10 {
         new java.io.File(root, "reg").getAbsolutePath,
         new java.io.File(root, "cp").getAbsolutePath)
     }
-    s.read.parquet(out).select("doc_id").orderBy("doc_id")
+    graft.io.Scan.parquet(s, out).select("doc_id").orderBy("doc_id")
   }
 
   /** Corpus bigram LM scoring ([[graft.ml.TextAnalysis.bigramLogProb]]):

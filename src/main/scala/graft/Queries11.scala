@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame => SDF, functions => F}
 import graft.ml.{Clustering, Sampling, Similarity}
+import graft.TestTables.t
 
 /** Wave-11 driver queries (round 9): distributed clustering + semantic
   * dedup + DSIR data selection — the curation shapes that partition a corpus
@@ -11,9 +12,6 @@ import graft.ml.{Clustering, Sampling, Similarity}
   * pair closure / importance weights from the identical rows, turning each
   * into a full hash-checked row rather than rows-only. */
 object Queries11 {
-
-  private def t(s: SparkSession, dir: String, name: String): SDF =
-    s.read.parquet(s"$dir/$name.parquet")
 
   private def sqDist(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     Similarity.l2DistanceSq(a, b)
@@ -131,9 +129,7 @@ object Queries11 {
     * (ts, event_id) and the oracle mirrors it with SQL windows. */
   private def qOverChain(s: SparkSession, dir: String): SDF = {
     import graft.Polars._
-    import graft.api.LazyFrame
-    val ev = t(s, dir, "events").transform(TestTables.normalizeEventsTs)
-    LazyFrame(ev)
+    TestTables.events(s, dir)
       .sortBy(Seq(col("ts"), col("event_id")))
       .withColumns(
         "nv" -> Polars.when(col("event_type") === "view").`then`(Polars.lit(null))
@@ -157,9 +153,7 @@ object Queries11 {
     * column. Frame pre-sorted so within-window order is (ts, event_id). */
   private def qGbdScan(s: SparkSession, dir: String): SDF = {
     import graft.Polars._
-    import graft.api.LazyFrame
-    val ev = t(s, dir, "events").transform(TestTables.normalizeEventsTs)
-    LazyFrame(ev)
+    TestTables.events(s, dir)
       .sortBy(Seq(col("ts"), col("event_id")))
       .groupByDynamic("ts", every = "6h")
       .agg(

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame => SDF, functions => F}
 import graft.ml.Retrieval
+import graft.TestTables.t
 
 /** Wave-12 driver queries (round 9 tail): sparse retrieval — BM25 scoring
   * of a query set against the document corpus via the inverted-probe shape
@@ -9,9 +10,6 @@ import graft.ml.Retrieval
   * to 6 dp before ranking AND in the output, per the exact-hash oracle
   * discipline. */
 object Queries12 {
-
-  private def t(s: SparkSession, dir: String, name: String): SDF =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** The four fixed retrieval queries drawn from the corpus vocabulary —
     * shared by every BM25-family gate query. */

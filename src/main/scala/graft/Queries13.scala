@@ -2,16 +2,13 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame => SDF, functions => F}
 import graft.Polars.col
-import graft.api.LazyFrame
 import graft.ml.Similarity
+import graft.TestTables.{eventsStream, lf, t}
 
 /** Wave-13 driver queries (round 10): the last SURVEY §2 reference-surface
   * cell (rolling_corr / rolling_cov, reference ext/polars/src/lib.rs:575-576)
   * plus round-10 beyond-reference additions. */
 object Queries13 {
-
-  private def lf(s: SparkSession, dir: String, name: String): LazyFrame =
-    LazyFrame(s.read.parquet(s"$dir/$name.parquet"))
 
   /** rolling_corr + rolling_cov over a 10-row trailing window in
     * (l_orderkey, l_linenumber) order. min_periods = window size, so the
@@ -30,9 +27,6 @@ object Queries13 {
       .select(F.col("l_orderkey"), F.col("l_linenumber"),
         F.round(F.col("rc"), 6).as("rc"), F.round(F.col("rcov"), 4).as("rcov"))
       .orderBy("l_orderkey", "l_linenumber")
-
-  private def t(s: SparkSession, dir: String, name: String): SDF =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** Cross-document LONGEST-MATCH spans ([[graft.ml.Dedup.crossDocSpans]]):
     * maximal consecutive shared-window runs between document pairs — the
@@ -282,10 +276,8 @@ object Queries13 {
     * stream root per call, like the other streaming gates. */
   private def qStreamingCap(s: SparkSession, dir: String): SDF = {
     implicit val sp: SparkSession = s
-    val schema = t(s, dir, "events").schema
     val root = QueryStage.streamRoot("scap")
-    val in = graft.streaming.Streaming.linkedInput(root, dir, "events")
-    val stream = graft.streaming.Streaming.scanParquetStream(in, schema)
+    val stream = eventsStream(s, dir, root)
       .transform(TestTables.normalizeEventsTs)
       .select("user_id", "event_id")
     val capped = graft.streaming.Streaming.capPerKeyStream(
@@ -310,7 +302,7 @@ object Queries13 {
     val path = QueryStage.stagePath(
       t(s, dir, "documents").select("doc_id", "lang", "text"),
       dir, "docs_by_lang", "parquet", partitionCols = Seq("lang"))
-    s.read.parquet(path)
+    graft.io.Scan.parquet(s, path)
       .filter(F.col("lang") === "de")
       .groupBy("lang")
       .agg(F.count(F.lit(1)).as("n"),

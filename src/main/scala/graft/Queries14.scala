@@ -2,17 +2,14 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame => SDF, functions => F}
 import graft.Polars.col
-import graft.api.LazyFrame
 import graft.DecimalDiscipline.decSum
+import graft.TestTables.lf
 
 /** Wave-14 driver queries (round 12): oracle gates for the semantics this
   * round aligned with the reference — grapheme-cluster string reverse,
   * the polars sum identity over empty slices, and the dtype-preserving
   * product aggregate. */
 object Queries14 {
-
-  private def lf(s: SparkSession, dir: String, name: String): LazyFrame =
-    LazyFrame(s.read.parquet(s"$dir/$name.parquet"))
 
   /** Grapheme-cluster reverse ([[graft.ext.GraphemeReverse]], reference
     * string_expr.rb:1253): a decomposed-ñ suffix is appended to real corpus

@@ -2,17 +2,14 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame => SDF, functions => F}
 import graft.Polars.col
-import graft.api.LazyFrame
 import graft.expr.Expr
+import graft.TestTables.lf
 
 /** Wave-15 driver queries (round 13): oracle gates for this round's
   * semantics alignments — quantile interpolation modes (half rounds away
   * from zero, element modes return f64), full joins keeping both key
   * columns under the suffix, and the within-list rank kernel. */
 object Queries15 {
-
-  private def lf(s: SparkSession, dir: String, name: String): LazyFrame =
-    LazyFrame(s.read.parquet(s"$dir/$name.parquet"))
 
   /** All five quantile interpolation modes per group (reference
     * expr.rb:2473). q=0.37 lands h strictly between integers for most

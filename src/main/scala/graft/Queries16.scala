@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame => SDF, functions => F}
 import graft.Polars.col
-import graft.api.LazyFrame
 import graft.expr.Expr
+import graft.TestTables.lf
 
 /** Wave-16 driver queries (round 15): oracle gates for the vertical
   * permutation ops (expr.sort / reverse re-zipped by position — the
@@ -11,9 +11,6 @@ import graft.expr.Expr
   * rule for mixed aggregate/elementwise projections, and null-counting
   * n_unique. */
 object Queries16 {
-
-  private def lf(s: SparkSession, dir: String, name: String): LazyFrame =
-    LazyFrame(s.read.parquet(s"$dir/$name.parquet"))
 
   /** Independent column sort + reverse zipped back by position (polars
     * expr.sort/reverse select semantics): the base order is pinned by an

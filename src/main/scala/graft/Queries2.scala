@@ -8,18 +8,11 @@ import graft.Polars._
 import graft.kernel.AsofJoin
 import graft.ml.{Dedup, Similarity, TextAnalysis}
 import graft.DecimalDiscipline.{decSum, decMean}
+import graft.TestTables.{events, lf, t}
 
 /** Wave-2 driver queries: string/temporal namespaces, window extras,
   * time-series ops (asof/upsample/dynamic), and the LLM-pipeline operators. */
 object Queries2 {
-
-  private def t(s: SparkSession, dir: String, name: String): SDF =
-    s.read.parquet(s"$dir/$name.parquet")
-  private def lf(s: SparkSession, dir: String, name: String): LazyFrame =
-    LazyFrame(t(s, dir, name))
-  private def events(s: SparkSession, dir: String): LazyFrame =
-    LazyFrame(t(s, dir, "events")
-      .transform(TestTables.normalizeEventsTs))
 
   // ---- strings (§2.8 .str) ----
   private def qStrOps(s: SparkSession, dir: String): SDF =

@@ -2,27 +2,19 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame => SDF, functions => F}
 import org.apache.spark.sql.expressions.Window
-import graft.api.{DataFrame, LazyFrame}
 import graft.expr.Expr
 import graft.Polars._
 import graft.kernel.{Ewm, Interpolate}
+import graft.TestTables.{events, lf}
 
 /** Wave-3 driver queries: ewm/interpolate kernels, rle/peaks, temporal
   * arithmetic, list ops, replace/cut/fold/is_in, merge_sorted/hstack. */
 object Queries3 {
 
-  private def t(s: SparkSession, dir: String, name: String): SDF =
-    s.read.parquet(s"$dir/$name.parquet")
-  private def lf(s: SparkSession, dir: String, name: String): LazyFrame =
-    LazyFrame(t(s, dir, name))
-  private def events(s: SparkSession, dir: String): SDF =
-    t(s, dir, "events")
-      .transform(TestTables.normalizeEventsTs)
-
   /** EWM mean per user over event time (rows-only: no SQL ewm equivalent;
     * semantics pinned by Kernel2Spec against pandas-identical values). */
   private def qEwm(s: SparkSession, dir: String): SDF = {
-    val ev = events(s, dir).select(F.col("event_id"), F.col("user_id"), F.col("ts"), F.col("value"))
+    val ev = events(s, dir).toSpark.select(F.col("event_id"), F.col("user_id"), F.col("ts"), F.col("value"))
     Ewm.ewm(ev, "value", "ts", by = Seq("user_id"), alpha = 0.3, adjust = true,
       outputs = Seq("mean", "std"))
       .select(F.col("event_id"), F.col("user_id"),
@@ -33,7 +25,7 @@ object Queries3 {
   /** Linear interpolation of sparse purchase values along each user's
     * timeline. */
   private def qInterpolate(s: SparkSession, dir: String): SDF = {
-    val ev = events(s, dir)
+    val ev = events(s, dir).toSpark
       .withColumn("pv", F.when(F.col("event_type") === "purchase", F.col("value")))
       .select(F.col("event_id"), F.col("user_id"), F.col("ts"), F.col("pv"))
     Interpolate.interpolate(ev, "pv", "ts", by = Seq("user_id"), outputCol = Some("pv_interp"))
@@ -53,7 +45,7 @@ object Queries3 {
 
   /** peak detection on event values in event_id order. */
   private def qPeaks(s: SparkSession, dir: String): SDF =
-    LazyFrame(events(s, dir))
+    events(s, dir)
       .sortBy(Seq(col("event_id")))
       .select(col("event_id"), col("value").peakMax.alias("is_peak"))
       .sortBy(Seq(col("event_id")))
@@ -167,7 +159,7 @@ object Queries3 {
     * the keys, no scan kernel). The frame is pre-sorted so the implicit row
     * order is (ts, event_id) and the oracle can mirror it. */
   private def qOverScan(s: SparkSession, dir: String): SDF =
-    LazyFrame(events(s, dir))
+    events(s, dir)
       .sortBy(Seq(col("ts"), col("event_id")))
       .withColumns(
         "cs" -> col("value").cumSum().over(col("user_id")),
@@ -185,7 +177,7 @@ object Queries3 {
     * lists are then exploded back to scalar rows with a 1-based position so
     * the output is hashable by value-level comparators (LIST cells are not). */
   private def qAggLists(s: SparkSession, dir: String): SDF =
-    LazyFrame(events(s, dir))
+    events(s, dir)
       .sortBy(Seq(col("ts"), col("event_id")))
       .groupBy("user_id")
       .agg(

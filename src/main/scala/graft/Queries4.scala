@@ -2,19 +2,13 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame => SDF, functions => F}
 import org.apache.spark.sql.types.{DoubleType, LongType, IntegerType}
-import graft.api.LazyFrame
 import graft.expr.Expr
 import graft.Polars._
+import graft.TestTables.{events, lf}
 
 /** Wave-4 driver queries: qcut, cumulative_eval, weighted rolling,
   * search_sorted, selector projections. */
 object Queries4 {
-
-  private def lf(s: SparkSession, dir: String, name: String): LazyFrame =
-    LazyFrame(s.read.parquet(s"$dir/$name.parquet"))
-  private def events(s: SparkSession, dir: String): LazyFrame =
-    LazyFrame(s.read.parquet(s"$dir/events.parquet")
-      .transform(TestTables.normalizeEventsTs))
 
   private def qQcut(s: SparkSession, dir: String): SDF =
     lf(s, dir, "orders")

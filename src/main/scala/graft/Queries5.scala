@@ -6,18 +6,11 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 import graft.api.{DataFrame, LazyFrame}
 import graft.expr.Expr
 import graft.Polars._
+import graft.TestTables.{events, lf, t}
 
 /** Wave-5 driver queries: diagonal concat, dummies, fills, masks, ranges,
   * spearman, encodings, categorical shim, horizontal mean/all/any, durations. */
 object Queries5 {
-
-  private def t(s: SparkSession, dir: String, name: String): SDF =
-    s.read.parquet(s"$dir/$name.parquet")
-  private def lf(s: SparkSession, dir: String, name: String): LazyFrame =
-    LazyFrame(t(s, dir, name))
-  private def events(s: SparkSession, dir: String): LazyFrame =
-    LazyFrame(t(s, dir, "events")
-      .transform(TestTables.normalizeEventsTs))
 
   private def qConcatDiagonal(s: SparkSession, dir: String): SDF = {
     val a = lf(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice")).collect()

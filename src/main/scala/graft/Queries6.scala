@@ -2,22 +2,14 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame => SDF, functions => F}
 import org.apache.spark.sql.types.LongType
-import graft.api.LazyFrame
 import graft.expr.Expr
 import graft.Polars._
 import graft.ml.{Dedup, Similarity, TextAnalysis}
+import graft.TestTables.{events, eventsStream, lf, t}
 
 /** Wave-6 driver queries: frame-level rolling, dt.round, string affixes /
   * multi-needle / split_exact, embedding LSH + IVF paths. */
 object Queries6 {
-
-  private def t(s: SparkSession, dir: String, name: String): SDF =
-    s.read.parquet(s"$dir/$name.parquet")
-  private def lf(s: SparkSession, dir: String, name: String): LazyFrame =
-    LazyFrame(t(s, dir, name))
-  private def events(s: SparkSession, dir: String): LazyFrame =
-    LazyFrame(t(s, dir, "events")
-      .transform(TestTables.normalizeEventsTs))
 
   /** Library rolling() API — trailing 2h window per user. */
   private def qRollingFrame(s: SparkSession, dir: String): SDF =
@@ -197,10 +189,8 @@ object Queries6 {
     * streaming partial aggregation must agree with batch. */
   private def qStreamingWindow(s: SparkSession, dir: String): SDF = {
     implicit val sp: SparkSession = s
-    val schema = t(s, dir, "events").schema
     val root = QueryStage.streamRoot("swin")
-    val in = graft.streaming.Streaming.linkedInput(root, dir, "events")
-    val stream = graft.streaming.Streaming.scanParquetStream(in, schema)
+    val stream = eventsStream(s, dir, root)
       .transform(TestTables.normalizeEventsTs)
     val windowed = graft.streaming.Streaming.windowedAgg(
       stream, "ts", "6 hours", by = Seq("event_type"),
@@ -242,10 +232,8 @@ object Queries6 {
     * into the compare; oracle is plain DISTINCT. */
   private def qStreamingDedup(s: SparkSession, dir: String): SDF = {
     implicit val sp: SparkSession = s
-    val schema = t(s, dir, "events").schema
     val root = QueryStage.streamRoot("sdedup")
-    val in = graft.streaming.Streaming.linkedInput(root, dir, "events")
-    val stream = graft.streaming.Streaming.scanParquetStream(in, schema)
+    val stream = eventsStream(s, dir, root)
       .transform(TestTables.normalizeEventsTs)
     val deduped = graft.streaming.Streaming.dedupWithinWatermark(
       stream, Seq("user_id"), "ts", watermark = "60 days")
@@ -260,17 +248,14 @@ object Queries6 {
     * Oracle-checked: the streamed copy must be byte-equivalent. */
   private def qStreamingSink(s: SparkSession, dir: String): SDF = {
     implicit val sp: SparkSession = s
-    val schema = t(s, dir, "events").schema
     val root = QueryStage.streamRoot("ssink")
-    // file stream sources take directories: link the single parquet into one
-    val in = graft.streaming.Streaming.linkedInput(root, dir, "events")
     val out = new java.io.File(root, "out").getAbsolutePath
-    val stream = graft.streaming.Streaming.scanParquetStream(in, schema)(s)
+    val stream = eventsStream(s, dir, root)
     graft.streaming.Streaming.tunedDrain(4) {
       graft.streaming.Streaming.sinkParquet(
         stream, out, new java.io.File(root, "cp").getAbsolutePath)
     }
-    s.read.parquet(out)
+    s.read.schema(stream.schema).parquet(out)
       .groupBy("event_type")
       .agg(F.count(F.lit(1)).as("n"),
         graft.DecimalDiscipline.decSumCol(F.col("value"), 2).as("sv"))

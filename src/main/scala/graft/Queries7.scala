@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession, DataFrame => SDF, functions => F}
-import graft.api.LazyFrame
 import graft.Polars._
+import graft.TestTables.{events, eventsStream, t}
 
 /** Wave-7 driver queries (round 3): timezone-offset components and the
   * multimodal header parsers exercised end-to-end with full value oracles.
@@ -12,12 +12,6 @@ import graft.Polars._
   * Spark side must round-trip them through real byte parsing.
   */
 object Queries7 {
-
-  private def t(s: SparkSession, dir: String, name: String): SDF =
-    s.read.parquet(s"$dir/$name.parquet")
-  private def events(s: SparkSession, dir: String): LazyFrame =
-    LazyFrame(t(s, dir, "events")
-      .transform(TestTables.normalizeEventsTs))
 
   // hex builders: Spark's hex() is big-endian; WAV needs little-endian, which
   // is a byte-pair reversal of the padded hex string
@@ -198,10 +192,8 @@ object Queries7 {
     * the Spark-side ns→µs conversion. */
   private def qStreamingSession(s: SparkSession, dir: String): SDF = {
     implicit val sp: SparkSession = s
-    val schema = t(s, dir, "events").schema
     val root = QueryStage.streamRoot("ssess")
-    val in = graft.streaming.Streaming.linkedInput(root, dir, "events")
-    val stream = graft.streaming.Streaming.scanParquetStream(in, schema)
+    val stream = eventsStream(s, dir, root)
       .transform(TestTables.normalizeEventsTs)
     val sessions = graft.streaming.Streaming.sessionWindowAgg(
       stream, "ts", "2 hours", by = Seq("user_id"),
@@ -235,10 +227,8 @@ object Queries7 {
     * range join on µs-truncated timestamps. */
   private def qStreamingJoin(s: SparkSession, dir: String): SDF = {
     implicit val sp: SparkSession = s
-    val schema = t(s, dir, "events").schema
     val root = QueryStage.streamRoot("sjoin")
-    val in = graft.streaming.Streaming.linkedInput(root, dir, "events")
-    def stream() = graft.streaming.Streaming.scanParquetStream(in, schema)
+    def stream() = eventsStream(s, dir, root)
       .transform(TestTables.normalizeEventsTs)
     val clicks = stream().filter(F.col("event_type") === "click")
       .select(F.col("event_id").as("click_id"), F.col("user_id").as("c_user"),

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame => SDF, functions => F}
+import graft.TestTables.t
 
 /** Wave-8 driver queries (round 4): the training-corpus curation layer —
   * Gopher-style repetition signals, benchmark decontamination, stratified /
@@ -10,9 +11,6 @@ import org.apache.spark.sql.{SparkSession, DataFrame => SDF, functions => F}
   * oracle reproduces the values bit-for-bit.
   */
 object Queries8 {
-
-  private def t(s: SparkSession, dir: String, name: String): SDF =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** Gopher repetition signals on documents: duplicate-word fraction plus
     * corpus-exploded 2-gram top/duplicate char coverage

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{SparkSession, DataFrame => SDF, functions => F}
 import graft.api.LazyFrame
 import graft.expr.Expr
 import graft.Polars._
+import graft.TestTables.{events, lf, t}
 
 /** Wave-9 driver queries (round 8): calendar-duration windows
   * (group_by_dynamic / frame rolling over mo/q/y) and oracle coverage for
@@ -11,11 +12,6 @@ import graft.Polars._
   * with_context, partition_by). Calendar queries run on `orders` — the one
   * table whose index column spans years. */
 object Queries9 {
-
-  private def t(s: SparkSession, dir: String, name: String): SDF =
-    s.read.parquet(s"$dir/$name.parquet")
-  private def lf(s: SparkSession, dir: String, name: String): LazyFrame =
-    LazyFrame(t(s, dir, name))
 
   /** Monthly tumbling group_by_dynamic per order priority (calendar `1mo`
     * every — reference lazy_frame.rb:1416-1459 + duration DSL mo/q/y). The
@@ -113,7 +109,7 @@ object Queries9 {
     * ([[graft.kernel.Scan.rollingByApply]]) — polars default closed="right",
     * window (t-30m, t]. */
   private def qRollingBy(s: SparkSession, dir: String): SDF =
-    LazyFrame(t(s, dir, "events").transform(TestTables.normalizeEventsTs))
+    events(s, dir)
       .withColumns(
         "rb_sum" -> col("value").rollingSumBy(col("ts"), "30m").over(col("user_id")),
         "rb_mean" -> col("value").rollingMeanBy(col("ts"), "30m").over(col("user_id")),
@@ -127,7 +123,7 @@ object Queries9 {
     * reshape to (-1, 4) lists, emitted as scalar (grp, pos, value) rows so
     * the gate can hash them (list cells crash the driver's pandas sorter). */
   private def qReshape(s: SparkSession, dir: String): SDF = {
-    val ev = t(s, dir, "events").transform(TestTables.normalizeEventsTs)
+    val ev = events(s, dir).toSpark
       .orderBy("event_id").limit(1000).select(F.col("value"))
     val rs = graft.api.Series("value", ev).reshape(Seq(-1L, 4L))
     org.apache.spark.sql.GraftInternalOps.zipWithDenseIndex(rs.df, "grp")
@@ -141,7 +137,7 @@ object Queries9 {
     * previous window ((s, s+6h] membership). Oracle: bucket t-1µs (epoch µs
     * is integral, so the shift exactly converts (s,e] to [s,e)). */
   private def qGbdClosed(s: SparkSession, dir: String): SDF =
-    LazyFrame(t(s, dir, "events").transform(TestTables.normalizeEventsTs))
+    events(s, dir)
       .groupByDynamic("ts", every = "6h", by = Seq("event_type"), closed = "right")
       .agg(Expr(F.count(F.lit(1))).alias("n"),
         graft.DecimalDiscipline.decSum(col("value"), 2).alias("sv"))

@@ -23,7 +23,9 @@ import org.apache.spark.sql.{DataFrame => SDF}
 object QueryStage {
   def stage(df: SDF, sfDir: String, name: String): SDF = {
     val path = stagePath(df, sfDir, name, "parquet")
-    df.sparkSession.read.parquet(path)
+    // the writer's schema is the one inference would find (a file source
+    // reads every column as nullable): reading with it starts no job
+    df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
   /** Stage in a named format (parquet/csv/json) and return the PATH, not a

@@ -6,22 +6,13 @@ import graft.api.{DataFrame, LazyFrame, SQLContext}
 import graft.expr.Expr
 import graft.ext.GraftExtensions
 import graft.Polars._
+import graft.TestTables.{events, lf, t}
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2, each expressed through the graft library (the polars-ruby-
   * equivalent Spark-native surface) and paired with DuckDB oracle SQL.
   */
 object SparkEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): SDF =
-    s.read.parquet(s"$dir/$name.parquet")
-  private def lf(s: SparkSession, dir: String, name: String): LazyFrame =
-    LazyFrame(t(s, dir, name))
-  /** events.ts normalization across testdata generations (nanos-as-long vs
-    * native timestamp[us]) lives in [[TestTables.normalizeEventsTs]]. */
-  private def events(s: SparkSession, dir: String): LazyFrame =
-    LazyFrame(t(s, dir, "events")
-      .transform(TestTables.normalizeEventsTs))
 
   import DecimalDiscipline.{decSum, decMean}
 

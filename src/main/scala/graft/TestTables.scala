@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{functions => F, DataFrame => SDF}
+import org.apache.spark.sql.{SparkSession, functions => F, DataFrame => SDF}
 import org.apache.spark.sql.types.{LongType, TimestampType}
+import graft.api.LazyFrame
 
 /** Schema-adaptive loading helpers for the driver's synthetic tables.
   *
@@ -14,6 +15,20 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * preserving and hashes identically to the DuckDB oracle's epoch_us.
   */
 object TestTables {
+  /** The driver table `dir/name.parquet`, scanned through [[graft.io.Scan]]. */
+  def t(s: SparkSession, dir: String, name: String): SDF =
+    graft.io.Scan.parquet(s, s"$dir/$name.parquet")
+  def lf(s: SparkSession, dir: String, name: String): LazyFrame =
+    LazyFrame(t(s, dir, name))
+  def events(s: SparkSession, dir: String): LazyFrame =
+    LazyFrame(normalizeEventsTs(t(s, dir, "events")))
+  /** `events` as a file stream with the table's schema, over a link in
+    * `root` (file stream sources take directories; see
+    * [[graft.streaming.Streaming.linkedInput]]). */
+  def eventsStream(s: SparkSession, dir: String, root: java.io.File): SDF =
+    graft.streaming.Streaming.scanParquetStream(
+      graft.streaming.Streaming.linkedInput(root, dir, "events"), t(s, dir, "events").schema)(s)
+
   def normalizeEventsTs(df: SDF): SDF = df.schema("ts").dataType match {
     case LongType      => df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     case TimestampType => df

@@ -47,7 +47,7 @@ object Verify {
         // matter how wrong the operator is (round 9 shipped three such
         // low-power gates). Warn loudly so a query drifting to empty is
         // visible in the verify log even while the compare stays green.
-        if (spark.read.parquet(s"$outDir/$name").isEmpty)
+        if (spark.read.schema(coerced.schema).parquet(s"$outDir/$name").isEmpty)
           System.err.println(s"[verify] WARNING: $name produced 0 rows — " +
             "the oracle compare has no power; re-parameterize the query")
       } catch { case e: Throwable =>

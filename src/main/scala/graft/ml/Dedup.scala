@@ -555,7 +555,8 @@ object Dedup {
     val crossDup =
       if (regFiles.nonEmpty)
         banded.join(
-          spark.read.parquet(regFiles: _*).select("band_idx", "band_hash"),
+          // every registration holds bands this code wrote: read with their schema
+          spark.read.schema(banded.select("band_idx", "band_hash").schema).parquet(regFiles: _*),
           Seq("band_idx", "band_hash"), "left_semi").select(idCol)
       else newDocs.select(idCol).limit(0)
     val owners = banded.groupBy("band_idx", "band_hash")

@@ -208,7 +208,7 @@ object Streaming {
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           stream.schema).write.parquet(out)
     } finally { lock.release(); lockCh.close() }
-    spark.read.parquet(out)
+    spark.read.schema(stream.schema).parquet(out)
   }
 
   private def drainLocked(stream: DataFrame, root: java.io.File, mode: String,
@@ -431,7 +431,8 @@ object Streaming {
         val crossDup =
           if (regFiles.nonEmpty)
             banded.join(
-              spark.read.parquet(regFiles: _*).select("band_idx", "band_hash"),
+              // every registration holds bands this code wrote: read with their schema
+              spark.read.schema(banded.select("band_idx", "band_hash").schema).parquet(regFiles: _*),
               Seq("band_idx", "band_hash"), "left_semi").select(idCol)
           else batch.select(idCol).limit(0)
         val owners = banded.groupBy("band_idx", "band_hash")

@@ -60,6 +60,33 @@ class QueryStageSpec extends SparkSpec {
     assert(err.getMessage.contains("unsupported format avro"))
   }
 
+  test("stage reads back with the written schema: the inferred schema, the same rows, no job") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("amt", DecimalType(12, 2)),
+      StructField("ts", TimestampType),
+      StructField("ntz", TimestampNTZType),
+      StructField("rec", StructType(Seq(StructField("a", IntegerType, nullable = false),
+        StructField("b", StringType))), nullable = false),
+      StructField("xs", ArrayType(IntegerType, containsNull = false), nullable = false),
+      StructField("m", MapType(StringType, LongType, valueContainsNull = false))))
+    val t0 = java.sql.Timestamp.valueOf("2024-02-29 12:34:56.789")
+    val ntz = java.time.LocalDateTime.parse("2024-03-01T00:00:00.000001")
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, BigDecimal("1234567890.12").bigDecimal, t0, ntz, Row(1, "x"), Seq(1, 2), Map("k" -> 3L)),
+      Row(2L, null, null, null, Row(2, null), Seq.empty[Int], null)), 2), schema)
+    val writeJobs = SparkSpec.withJobs(spark)(QueryStage.stagePath(df, sfDir, "typed", "parquet"))._2
+    val (back, jobs) = SparkSpec.withJobs(spark)(QueryStage.stage(df, sfDir, "typed"))
+    assert(jobs == writeJobs, "the read-back must add no job to the write")
+    val inferred = spark.read.parquet(s"$stageRoot/typed")
+    assert(back.schema == inferred.schema)
+    def rows(d: org.apache.spark.sql.DataFrame) = d.orderBy("id").collect().map(_.toString).toSeq
+    assert(rows(back) == rows(inferred))
+    assert(rows(back) == rows(df))
+  }
+
   test("streamRoot gives a fresh root per call; the previous root still reads") {
     val r1 = QueryStage.streamRoot("qs_spec")
     Seq(1L, 2L).toDF("id").write.parquet(new java.io.File(r1, "out").getPath)

@@ -11,6 +11,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** `f`'s result and the number of Spark jobs it started. */
+  def withJobs[T](s: SparkSession)(f: => T): (T, Int) = {
+    val sc = s.sparkContext
+    org.apache.spark.GraftTestListenerOps.flushListeners(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      val r = f
+      org.apache.spark.GraftTestListenerOps.flushListeners(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
   lazy val session: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft-warehouse")
     wh.toFile.deleteOnExit()
